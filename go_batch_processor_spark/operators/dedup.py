@@ -216,32 +216,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact_jaccard_pairs(load_table(spark, sf_dir, "documents"))
 
 
-def minhash_signatures(
-    docs: DataFrame, k: int = MINHASH_K, shingles: DataFrame | None = None
-) -> DataFrame:
-    """k-permutation MinHash signature per doc: mh_i = min over shingles of
-    xxhash64(i, shingle). Seeded by the constant i -> fully deterministic.
-
-    Shape note (measured at sf0.1, 24 hashes): explode + groupBy-min wins.
-    Map-side partial aggregation shrinks the shuffle to |docs| x k longs
-    per map partition, and the hash computation stays in codegen. The two
-    "shuffle-free" alternatives are both SLOWER: k separate
-    array_min(transform(...)) projections re-evaluate the gram pipeline per
-    column after projection collapse (~2x), and a single F.aggregate fold
-    over the gram array runs interpreted (higher-order functions don't
-    codegen) with per-element array allocations (~3x).
-
-    ``shingles``: pass a precomputed (doc_id, shingle) frame to share one
-    (persisted) shingle stage between signature generation and downstream
-    exact verification — without it callers recompute the explode pipeline.
-    """
-    sh = doc_shingles(docs) if shingles is None else shingles
-    aggs = [
-        F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"mh{i}") for i in range(k)
-    ]
-    return sh.groupBy("doc_id").agg(*aggs)
-
-
 # Last call's persisted signature table — released on the NEXT call (the
 # returned lazy plan reads these blocks, so in-call unpersist is unsafe).
 _SIG_CACHE: DataFrame | None = None
@@ -296,6 +270,12 @@ def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # direct one (~2^-64 per pair); the exact-string inverted-index path
     # (dedup_ngram_jaccard) remains the oracle-grade twin.
     sh = doc_shingle_hashes(docs)
+    # Shape (measured at sf0.1, 24 hashes): explode + groupBy-min wins.
+    # Map-side partial aggregation shrinks the shuffle to |docs| x k longs
+    # per map partition and the hashing stays in codegen. k separate
+    # array_min(transform(...)) projections re-evaluate the gram pipeline
+    # per column (~2x), and one F.aggregate fold runs interpreted with
+    # per-element array allocations (~3x).
     aggs = [
         F.min(F.xxhash64(F.lit(i), F.col("sh_h"))).alias(f"mh{i}")
         for i in range(MINHASH_K)

@@ -43,8 +43,10 @@ REGISTRY: dict[str, QuerySpec] = {}
 # Session confs every query depends on for correctness, enforced at call
 # time because the driver hands queries ITS OWN SparkSession (not our
 # session.get_spark one): timestamps must be UTC to hash-match DuckDB's
-# naive timestamps, and events.parquet's TIMESTAMP(NANOS) column needs the
-# nanos-as-long read path. All are runtime-settable session confs.
+# naive timestamps, and the nanos-as-long read path is kept for fixture
+# regenerations that write events.ts as TIMESTAMP(NANOS) (the current
+# fixtures store MICROS), which catalog.load_table reads as well. All are
+# runtime-settable session confs.
 REQUIRED_CONFS = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.legacy.parquet.nanosAsLong": "true",

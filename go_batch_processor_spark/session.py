@@ -54,8 +54,10 @@ def get_spark(
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # events.parquet stores ts as TIMESTAMP(NANOS), which Spark has no
-        # native type for: read as long, converted in catalog.load_table.
+        # The current events.parquet fixtures store ts as TIMESTAMP(MICROS).
+        # Kept for fixture regenerations that write TIMESTAMP(NANOS), which
+        # Spark has no native type for: read as long, and catalog.load_table
+        # converts it as well.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

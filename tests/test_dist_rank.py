@@ -105,25 +105,41 @@ def test_group_cumsum_plan_is_bucket_parallel(spark, sf_dir):
     assert "SinglePartition" not in plan
 
 
-def test_nan_keys_and_nan_bounds_still_rank_exactly(spark):
-    # r14 (ADVICE): approxQuantile can return NaN boundaries when the key
-    # column contains NaN; bounds are NaN-filtered before the CASE chain.
-    # NaN keys themselves compare false against every bound, so they land
-    # deterministically in bucket 0 (asc) and the rank stays a permutation
-    # that matches the single-task global window (NaN sorts LAST asc in
-    # both the window and the bucketed sort — Spark total order).
+def _nan_ranks(spark, descending):
+    """Distributed and single-task window ranks of the same NaN-keyed frame."""
     rows = [(i, float(i % 7)) for i in range(200)] + [
         (1000 + i, float("nan")) for i in range(20)
     ]
     df = spark.createDataFrame(rows, "id long, x double")
+    x = F.col("x").desc() if descending else F.col("x").asc()
     got, n = distributed_row_number(
-        df, "x", [F.col("x").asc(), F.col("id").asc()], "rn", nbuckets=8
+        df, "x", [x, F.col("id").asc()], "rn", descending=descending, nbuckets=8
     )
-    w = Window.partitionBy().orderBy(F.col("x").asc(), F.col("id").asc())
+    w = Window.partitionBy().orderBy(x, F.col("id").asc())
     want = df.withColumn("rn", F.row_number().over(w).cast("long"))
     g = {r["id"]: r["rn"] for r in got.collect()}
     e = {r["id"]: r["rn"] for r in want.collect()}
-    assert g == e and n == len(e)
+    assert n == len(e)
+    return g, e
+
+
+def test_nan_keys_and_nan_bounds_still_rank_exactly(spark):
+    # r14 (ADVICE): approxQuantile can return NaN boundaries when the key
+    # column contains NaN; bounds are NaN-filtered before the CASE chain.
+    # Spark orders NaN greatest, so NaN > b holds for every bound: NaN
+    # keys land in the last bucket ascending, and the rank stays a
+    # permutation that matches the single-task global window (NaN sorts
+    # LAST asc in both the window and the bucketed sort).
+    g, e = _nan_ranks(spark, descending=False)
+    assert g == e
+
+
+def test_nan_keys_and_nan_bounds_still_rank_exactly_descending(spark):
+    # Descending, NaN > b puts NaN keys in bucket 0, and they rank FIRST,
+    # as in the single-task descending window.
+    g, e = _nan_ranks(spark, descending=True)
+    assert g == e
+    assert {e[1000 + i] for i in range(20)} == set(range(1, 21))
 
 
 def test_backtick_column_name_is_escaped(spark):

@@ -7,8 +7,10 @@ stop/drain. Event-driven (threading.Event), not sleep-sequenced.
 
 from __future__ import annotations
 
+import sys
 import threading
 import time
+from types import SimpleNamespace
 
 import pytest
 
@@ -301,6 +303,100 @@ def test_stop_drains_in_flight_and_blocks_new_batches(spark):
     n_after = len(rec.calls)
     time.sleep(0.3)
     assert len(rec.calls) == n_after
+
+
+class _NoopSparkContext:
+    def setJobGroup(self, *args, **kwargs):
+        pass
+
+    def cancelJobGroup(self, group):
+        pass
+
+
+def stub_batch():
+    """A batch the worker can tag with a job group, with no Spark behind it."""
+    return SimpleNamespace(sparkSession=SimpleNamespace(sparkContext=_NoopSparkContext()))
+
+
+def test_scheduler_sleeps_while_all_slots_are_busy():
+    release = threading.Event()
+    pipe = BatchPipeline(
+        2, FnSupplier(stub_batch), FnProcessor(lambda b: release.wait(10.0) and b)
+    )
+    pipe.start()
+    stopper = threading.Thread(target=pipe.stop)
+    try:
+        deadline = time.monotonic() + 5.0
+        while pipe.current_workers < 2 and time.monotonic() < deadline:
+            time.sleep(0.01)
+        assert pipe.current_workers == 2
+        cpu0 = time.process_time()
+        time.sleep(1.0)
+        saturated_cpu_s = time.process_time() - cpu0
+        # Both slots stay busy, so only stop() can wake the scheduler.
+        stopper.start()
+        pipe._scheduler.join(timeout=2.0)
+        assert not pipe._scheduler.is_alive()
+    finally:
+        release.set()
+        if stopper.is_alive():
+            stopper.join(timeout=10)
+    assert not stopper.is_alive()
+    assert saturated_cpu_s < 0.2
+    assert pipe.current_workers == 0
+
+
+def test_scheduler_never_misses_a_freed_slot():
+    # Workers take long enough for the scheduler to find every slot busy.
+    # A lost wakeup would leave it waiting with every worker gone, so the
+    # backlog would never finish.
+    backlog = [stub_batch() for _ in range(400)]
+    lock = threading.Lock()
+
+    def fetch():
+        with lock:
+            return backlog.pop() if backlog else None
+
+    done = []
+    all_done = threading.Event()
+
+    def finalize(processed, error):
+        with lock:
+            done.append(error)
+            if len(done) == 400:
+                all_done.set()
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        pipe = (
+            BatchPipeline(8, FnSupplier(fetch), FnProcessor(lambda b: time.sleep(0.001) or b))
+            .with_finalizer(FnFinalizer(finalize))
+            .with_no_batch_sleep_interval_ms(5)
+            .start()
+        )
+        assert all_done.wait(30.0)
+        pipe.stop()
+    finally:
+        sys.setswitchinterval(interval)
+    assert not pipe._scheduler.is_alive()
+    assert done == [None] * 400
+
+
+def test_stop_interrupts_empty_source_backoff():
+    polled = threading.Event()
+
+    def fetch():
+        polled.set()
+        return None
+
+    pipe = BatchPipeline(1, FnSupplier(fetch), FnProcessor(lambda b: b))
+    pipe.with_no_batch_sleep_interval_ms(60_000).start()
+    assert polled.wait(5.0)
+    t0 = time.monotonic()
+    pipe.stop()
+    assert time.monotonic() - t0 < 2.0
+    assert not pipe._scheduler.is_alive()
 
 
 def test_foreachbatch_epoch_replay_is_idempotent(spark, sf_dir, tmp_path):
