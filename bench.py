@@ -154,16 +154,14 @@ HEADLINE = [
     # round 10 new-key headliners: the two plan-heaviest additions of the
     # round (exact matrix profile = banded self-join + per-diagonal
     # windows; harmonic centrality = the batched multi-pivot BFS core),
-    # plus their cache-sharing siblings — in-bench these should read
-    # near-zero AFTER their family key, which IS the plan evidence the
-    # shared-frame doctrine claims.
+    # plus the siblings that share their builder code (_mp_dists,
+    # _pivot_distances); each sibling builds its frame on every call.
     "timeseries_matrix_profile",
     "timeseries_matrix_profile_join",
     "timeseries_motif_topk",
     "graph_harmonic_centrality",
     "graph_avg_path_length",
-    # round 11 addition: the fourth matrix-profile consumer — in-bench
-    # it should read ~0.1 s after the family key (shared-frame evidence)
+    # round 11 addition: the fourth matrix-profile consumer
     "timeseries_discord_topk",
     # round 12 addition: the funnel-attribution key (one user_id shuffle
     # + two chained last_value window passes — the no-range-join plan)
@@ -203,9 +201,10 @@ CHECKPOINT_HEAVY = [
     "stats_cox_ph",
     "dedup_containment_ngram",
     # r12 (r11 verdict item 4): the one recovered r11 in-bench uptick
-    # (0.89 -> 1.15 s after discord joined as the fourth _mp_dists
-    # consumer) — record its standalone pair to separate interleave
-    # noise from a real cache-path change.
+    # (0.89 -> 1.15 s after discord joined as the fourth consumer of the
+    # shared _mp_dists code, which builds its frame on each call) —
+    # record its standalone time to separate interleave noise from a
+    # plan change.
     "timeseries_matrix_profile",
 ]
 
@@ -251,34 +250,19 @@ def main() -> None:
     # Solo-timed pass for the checkpoint-heavy set: same query, same
     # session, but no interleaved neighbors writing checkpoints — the
     # delta vs times[name] is disk contention, not plan cost.
-    #
-    # Honesty about module-level caches (r8 ADVICE): the triangle-census /
-    # bigram caches survive spark.catalog.clearCache(), so a naive solo
-    # sample would time a cache HIT (final agg only) and the one-time build
-    # would vanish into the interleaved pass's first sample (dropped by the
-    # median). Clear them before each query's solo run: sample 1 then pays
-    # the full cold build (reported as standalone_cold) and the median of
-    # the remaining samples is the steady-state number (comparable to the
-    # r7/r8 standalone series).
-    from go_batch_processor_spark.dfcache import clear_all as _clear_df_caches
-
     standalone: dict[str, float] = {}
-    standalone_cold: dict[str, float] = {}
     for name in CHECKPOINT_HEAVY:
         if name not in REGISTRY:
             continue
-        _clear_df_caches()
-        spark.catalog.clearCache()
         solo: list[float] = []
-        for _ in range(n_runs + 1):
+        for _ in range(n_runs):
             t0 = time.perf_counter()
             REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode(
                 "overwrite"
             ).save()
             solo.append(time.perf_counter() - t0)
             spark.catalog.clearCache()
-        standalone_cold[name] = round(solo[0], 3)
-        standalone[name] = round(statistics.median(solo[1:]), 3)
+        standalone[name] = round(statistics.median(solo), 3)
 
     print(
         json.dumps(
@@ -288,7 +272,6 @@ def main() -> None:
                 "unit": "sec",
                 "queries": times,
                 "standalone": standalone,
-                "standalone_cold": standalone_cold,
                 "sf": sf,
                 "runs": n_runs,
             }

@@ -21,7 +21,6 @@ from __future__ import annotations
 
 import logging
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -216,11 +215,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact_jaccard_pairs(load_table(spark, sf_dir, "documents"))
 
 
-# Last call's persisted signature table — released on the NEXT call (the
-# returned lazy plan reads these blocks, so in-call unpersist is unsafe).
-_SIG_CACHE: DataFrame | None = None
-
-
 @register("dedup_near_minhash", tags={"rows_only"})
 def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-dup detection, the linear-time path for 100 TB:
@@ -247,21 +241,10 @@ def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale note: the hash set adds ~8 bytes x distinct shingles per doc to
     the signature shuffle — the same order as the shingle shuffle it
     replaces, so total bytes moved DROP (one shuffle instead of two+ and
-    longs instead of strings). The compact signature table is persisted; it
-    feeds banding and both verify probes. Cache ownership: the persisted
-    blocks back the RETURNED lazy plan, so they cannot be unpersisted
-    here — instead each call releases the PREVIOUS call's signature cache
-    (at most one alive per process) and long-lived callers that keep the
-    result around may additionally rely on LRU eviction (MEMORY_AND_DISK,
-    evictable) or clearCache().
+    longs instead of strings). The compact signature table is
+    localCheckpoint'd inside the returned plan; it feeds banding and both
+    verify probes, and its blocks are freed when that plan is dropped.
     """
-    global _SIG_CACHE
-    if _SIG_CACHE is not None:
-        try:
-            _SIG_CACHE.unpersist(blocking=False)
-        except Exception:  # pragma: no cover — prior session already gone
-            pass
-        _SIG_CACHE = None
     docs = load_table(spark, sf_dir, "documents")
     # Hash-native shingles (doc_shingle_hashes): word-hash combination,
     # no shingle strings anywhere — 4.3x faster explode, and the k
@@ -280,8 +263,7 @@ def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min(F.xxhash64(F.lit(i), F.col("sh_h"))).alias(f"mh{i}")
         for i in range(MINHASH_K)
     ] + [F.collect_set("sh_h").alias("hs")]
-    sig = sh.groupBy("doc_id").agg(*aggs).persist(StorageLevel.MEMORY_AND_DISK)
-    _SIG_CACHE = sig
+    sig = sh.groupBy("doc_id").agg(*aggs).localCheckpoint(eager=False)
     rows_per_band = MINHASH_K // LSH_BANDS
     # Single explode over an array of (band, sig) structs: the signature
     # aggregation is computed ONCE (a per-band union would re-run the whole

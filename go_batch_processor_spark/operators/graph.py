@@ -22,18 +22,6 @@ PR_ITERS = 5
 PR_DAMPING = 0.85
 PR_TOP_K = 20
 
-# Shared triangle census (r8, judge item 4): graph_triangle_count and
-# graph_local_clustering enumerate the SAME degree-oriented wedges over
-# the SAME part co-purchase graph — the two most expensive bench entries
-# (18.6 s combined in-bench at r7). The census (degree frame + exact
-# triangle set) is built once per (session, fixture) and the
-# localCheckpoint'd frames are shared; the second caller pays only its
-# own aggregate. Keyed on applicationId so a restarted session can never
-# serve a dead checkpoint.
-# Stale-session eviction + the executor-loss caveat (localCheckpoint is
-# non-reliable storage) are documented in go_batch_processor_spark.dfcache.
-_TRI_CENSUS_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
 
 def _ckpt_count(df: DataFrame) -> tuple[DataFrame, int]:
     """localCheckpoint + row count fused into ONE Spark job (r14,
@@ -72,18 +60,14 @@ def _triangle_census(
            triangle count recovers exactly as sum(t) / 3 (every
            triangle contributes 3 membership rows).
 
-    Both shared frames are localCheckpoint-materialized and NODE-sized —
-    materializing the raw (x, y, z) triangle frame instead was measured
-    37 s at sf0.1 (triangle-set-sized checkpoint) vs 9 s for this shape.
+    Shared code for graph_triangle_count and graph_local_clustering,
+    which enumerate the same degree-oriented wedges; it builds the census
+    on each call, so each key answers for the lineitem table as it is
+    now. Both frames are localCheckpoint'd inside the caller's plan and
+    NODE-sized — materializing the raw (x, y, z) triangle frame instead
+    was measured 37 s at sf0.1 (triangle-set-sized checkpoint) vs 9 s
+    for this shape.
     """
-    import os
-
-    key = (spark.sparkContext.applicationId, os.path.realpath(sf_dir))
-    from go_batch_processor_spark.dfcache import evict_stale
-
-    evict_stale(_TRI_CENSUS_CACHE, key[0])
-    if key in _TRI_CENSUS_CACHE:
-        return _TRI_CENSUS_CACHE[key]
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     a = li.alias("a")
     b = li.alias("b")
@@ -141,7 +125,6 @@ def _triangle_census(
         .agg(F.count(F.lit(1)).cast("bigint").alias("t"))
         .localCheckpoint(eager=False)
     )
-    _TRI_CENSUS_CACHE[key] = (deg, tri_n)
     return deg, tri_n
 
 
@@ -488,15 +471,11 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is exactly why this is safe to change for scale.
 
     The undirected edge set, degree frame, oriented DAG, and the
-    per-node triangle membership counts are built by the shared
-    ``_triangle_census`` (one localCheckpoint'd census per
-    session+fixture) — graph_local_clustering consumes the same frames,
-    so running both keys pays the wedge join once (r8 change: the two
-    keys were the bench's top-two entries at 18.6 s combined, each
-    re-enumerating identical wedges). The global count recovers exactly
-    from the node-sized census as sum(t) / 3 — every triangle
-    contributes three membership rows, and the division is exact
-    integer arithmetic.
+    per-node triangle membership counts are built by ``_triangle_census``,
+    code shared with graph_local_clustering that computes the census on
+    each call. The global count recovers exactly from the node-sized
+    census as sum(t) / 3 — every triangle contributes three membership
+    rows, and the division is exact integer arithmetic.
     """
     _, tri_n = _triangle_census(spark, sf_dir)
     return tri_n.agg(
@@ -1321,18 +1300,7 @@ def graph_betweenness_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     edges = interaction_edges(spark, sf_dir)
     sources = _pivot_sources(spark, edges)
-    acc = _brandes_batched(
-        spark,
-        edges,
-        sources,
-        BETW_MAX_HOPS,
-        # seed the closeness/harmonic/avg-path shared pivot-distance
-        # cache from the sigma-carrying forward union (identical
-        # (p, node, d) set)
-        publish_dist=lambda dist: _store_pivot_distances(
-            spark, sf_dir, dist.select("p", "node", "d"), sources
-        ),
-    )
+    acc = _brandes_batched(spark, edges, sources, BETW_MAX_HOPS)
     out = (
         acc.select(
             F.when(F.col("node") % 2 == 0, F.lit("user"))
@@ -1356,7 +1324,6 @@ def _brandes_batched(
     edges: DataFrame,
     sources: list[int],
     max_hops: int,
-    publish_dist=None,
 ) -> DataFrame:
     """Batched-pivot Brandes accumulation over an explicit directed edge
     list (pass both directions for an undirected graph): returns
@@ -1365,15 +1332,7 @@ def _brandes_batched(
     registered key (r10, r9 verdict item 6) so property tests can drive
     the REAL distributed passes on adversarial fixtures — disconnected
     components, chains whose levels have zero-successor nodes, hop-cap
-    truncation — that the dense bipartite fixture never exercises.
-
-    ``publish_dist`` (r10): called once with the forward pass's full
-    (p, node, d, sigma) distance union — the same set _bfs_multi would
-    compute for the same (edges, sources, hops) — so the registered
-    betweenness key can seed the closeness/harmonic shared cache and
-    running all three centrality keys pays ONE BFS total. The union is
-    built from per-level localCheckpoints, so it stays valid after this
-    function unpersists the edge list."""
+    truncation — that the dense bipartite fixture never exercises."""
     from pyspark import StorageLevel
 
     edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
@@ -1414,8 +1373,6 @@ def _brandes_batched(
             maxd = hop
             dist = dist.unionByName(nxt)
             frontier = nxt
-        if publish_dist is not None:
-            publish_dist(dist)
         # backward dependency accumulation, deepest level first (all
         # pivots at once; a pivot whose BFS ended shallower simply has
         # no rows at the deeper levels)
@@ -1494,41 +1451,6 @@ def _brandes_batched(
 
 CLOSENESS_TOP_K = 20
 
-# Shared pivot-distance frame (r10): graph_closeness_landmarks and
-# graph_harmonic_centrality consume the IDENTICAL _bfs_multi output
-# (same edge list, same lowest-id pivot set, same hop cap) — running
-# both keys paid the 4-pivot BFS twice (~4 s each at sf0.1). Same
-# session+fixture cache discipline as _TRI_CENSUS_CACHE: the frame is
-# (pivot x node)-sized and localCheckpoint'd by _bfs_multi; hygiene
-# caveats in go_batch_processor_spark.dfcache.
-_PIVOT_DIST_CACHE: dict[tuple[str, str], tuple[DataFrame, list[int]]] = {}
-
-
-def _pivot_cache_key(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    import os
-
-    return (spark.sparkContext.applicationId, os.path.realpath(sf_dir))
-
-
-def _store_pivot_distances(
-    spark: SparkSession, sf_dir: str, dist: DataFrame, sources: list[int]
-) -> None:
-    """Single owner of the cache-insert recipe (key shape + hygiene) —
-    used by both _pivot_distances and the betweenness forward-pass
-    seeding so the two entry points can never de-synchronize (r10
-    code-review find). The frame is localCheckpoint'd HERE so every
-    cached entry is a whole-frame LogicalRDD that dfcache._drop can
-    actually free (a derived select-over-union plan is not)."""
-    from go_batch_processor_spark.dfcache import evict_stale
-
-    key = _pivot_cache_key(spark, sf_dir)
-    evict_stale(_PIVOT_DIST_CACHE, key[0])
-    if key not in _PIVOT_DIST_CACHE:
-        _PIVOT_DIST_CACHE[key] = (
-            dist.localCheckpoint(eager=False),
-            sources,
-        )
-
 
 def _pivot_sources(spark: SparkSession, edges: DataFrame) -> list[int]:
     """The {BETW_N_SOURCES} lowest node ids — the deterministic pivot
@@ -1548,18 +1470,11 @@ def _pivot_distances(
 ) -> tuple[DataFrame, list[int]]:
     """(distance frame (p, node, d) incl. d=0 self rows, pivot list) for
     the {BETW_N_SOURCES} lowest-id pivots of the interaction graph at
-    {BETW_MAX_HOPS} hops — built once per (session, fixture)."""
-    key = _pivot_cache_key(spark, sf_dir)
-    from go_batch_processor_spark.dfcache import evict_stale
-
-    evict_stale(_PIVOT_DIST_CACHE, key[0])
-    if key in _PIVOT_DIST_CACHE:
-        return _PIVOT_DIST_CACHE[key]
+    {BETW_MAX_HOPS} hops. Shared code for the closeness, harmonic and
+    avg-path keys; it runs the pivot BFS on each call."""
     edges = interaction_edges(spark, sf_dir)
     sources = _pivot_sources(spark, edges)
-    dist = _bfs_multi(spark, edges, sources, BETW_MAX_HOPS)
-    _store_pivot_distances(spark, sf_dir, dist, sources)
-    return _PIVOT_DIST_CACHE[key]
+    return _bfs_multi(spark, edges, sources, BETW_MAX_HOPS), sources
 
 
 @register(
@@ -1755,10 +1670,9 @@ def graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     C(out_deg ≈ sqrt(2m), 2); see graph_triangle_count) while the oracle
     keeps the simple id order; per-node membership counts agree because
     they count the same triangles. Scale: the census (edges, degrees,
-    oriented DAG, per-node triangle counts) comes from the shared
-    localCheckpoint'd ``_triangle_census`` — graph_triangle_count reads
-    the identical frames, so the wedge join runs once per session+fixture
-    however many of the two keys run."""
+    oriented DAG, per-node triangle counts) comes from
+    ``_triangle_census``, code shared with graph_triangle_count that
+    enumerates the wedges on each call."""
     deg, tri_n = _triangle_census(spark, sf_dir)
     return (
         deg.filter(F.col("d") >= 2)
@@ -2105,11 +2019,10 @@ def graph_avg_path_length(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimator (exact needs all-pairs BFS).
 
     Parity: sum_d and n_pairs are exact BIGINTs (order-free); the
-    average is ONE IEEE division + round. Scale shape: consumes the
-    SHARED pivot-distance frame (_pivot_distances — running any of the
-    four centrality keys builds it once), then a single
-    partial-combinable global aggregate. Driver state: none beyond the
-    pivot list.
+    average is ONE IEEE division + round. Scale shape: the pivot BFS of
+    _pivot_distances (code shared with the closeness and harmonic keys,
+    run on each call), then a single partial-combinable global
+    aggregate. Driver state: none beyond the pivot list.
     """
     all_d, _sources = _pivot_distances(spark, sf_dir)
     agg = all_d.filter(F.col("d") > 0).agg(

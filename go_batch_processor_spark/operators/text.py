@@ -20,28 +20,20 @@ from go_batch_processor_spark.registry import REGISTRY, register
 TOP_WORDS = 20
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is")
 
-# Shared corpus bigram-count model (r8, the graph _triangle_census
-# pattern): text_bigram_kn_logprob, text_head_middle_tail_split and
-# text_pmi_collocations each rebuilt the identical (w1, w2) count table
-# from a full corpus explode — the most expensive shared scan in the
-# text family. The DISTINCT-bigram count frame is Zipf-bounded
-# (vocabulary-sized, never corpus-sized) so it is safe to
-# localCheckpoint and share per (session, fixture); the corpus-sized
-# exploded stream `bi` is NOT cached (the graph lesson: materializing
-# the corpus-sized frame cost 37 s vs 9 s) — each consumer re-derives
-# it lazily and pays its own scoring join. Stale-session eviction + the
-# executor-loss caveat live in go_batch_processor_spark.dfcache.
-_BIGRAM_CB_CACHE: dict[tuple[str, str], DataFrame] = {}
-
 
 def _corpus_bigrams(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
-    """(bi, cb): the per-occurrence bigram stream (lazy, rebuilt per
-    consumer) and the shared localCheckpoint'd distinct-bigram count
-    frame (w1, w2, c BIGINT)."""
-    import os
+    """(bi, cb): the per-occurrence bigram stream and the
+    localCheckpoint'd distinct-bigram count frame (w1, w2, c BIGINT).
 
+    Shared code for text_bigram_kn_logprob, text_head_middle_tail_split
+    and text_pmi_collocations, which score against the same count
+    table; it builds both frames on each call. The count frame is
+    Zipf-bounded (vocabulary-sized, never corpus-sized), so it is
+    checkpointed inside the caller's plan; the corpus-sized stream
+    ``bi`` is left lazy (the graph lesson: materializing the
+    corpus-sized frame cost 37 s vs 9 s)."""
     d = load_table(spark, sf_dir, "documents")
     w = F.split(F.lower("text"), " ")
     # r13 optimization: the fixture parquet is one row group, so without
@@ -63,19 +55,14 @@ def _corpus_bigrams(
         )
         .select("doc_id", "g.w1", "g.w2")
     )
-    key = (spark.sparkContext.applicationId, os.path.realpath(sf_dir))
-    from go_batch_processor_spark.dfcache import evict_stale
-
-    evict_stale(_BIGRAM_CB_CACHE, key[0])
-    cb = _BIGRAM_CB_CACHE.get(key)
-    if cb is None:
-        cb = (
-            bi.groupBy("w1", "w2")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-            .localCheckpoint(eager=False)
-        )
-        _BIGRAM_CB_CACHE[key] = cb
+    cb = (
+        bi.groupBy("w1", "w2")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
+        .localCheckpoint(eager=False)
+    )
     return bi, cb
+
+
 # Tiny per-language function-word profiles for the n-gram/heuristic lang-ID.
 LANG_PROFILES = {
     "en": ("the", "of", "and", "a", "to", "is"),
@@ -1387,9 +1374,9 @@ def text_bigram_kn_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     is partial-combinable. avg(ln p) is order-dependent double math —
     rounded to 6 on both engines per the parity rules; the probability
     itself is integer-count arithmetic in an identical expression tree,
-    hence bit-exact per bigram. The (w1,w2) count model comes from the
-    shared _corpus_bigrams cache (vocab-sized checkpoint, built once per
-    session+fixture across the three bigram-model keys)."""
+    hence bit-exact per bigram. The (w1,w2) count model comes from
+    _corpus_bigrams, code shared with the other two bigram-model keys
+    that builds its vocab-sized checkpoint on each call."""
     bi, cb = _corpus_bigrams(spark, sf_dir)
     cw = cb.groupBy("w1").agg(
         F.sum("c").alias("cw"), F.count(F.lit(1)).alias("nf")
@@ -1458,7 +1445,7 @@ def text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the top-k is TakeOrderedAndProject. The PMI expression is
     integer-count arithmetic in an identical tree → bit-exact, so even
     the k-boundary ordering matches the oracle exactly. The count table
-    rides the shared _corpus_bigrams checkpoint."""
+    comes from _corpus_bigrams (shared code, built on each call)."""
     _, cb0 = _corpus_bigrams(spark, sf_dir)
     cb = cb0.select("w1", "w2", F.col("c").alias("c12"))
     n = cb.agg(F.sum("c12").alias("nb"))

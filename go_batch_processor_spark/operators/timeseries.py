@@ -4577,28 +4577,16 @@ def timeseries_matrix_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Shared pairwise-distance frame for the matrix-profile family (r10):
-# the self-join profile and the AB-join consume the IDENTICAL
-# (i, j, dist) frame (the join's pairs are the subset with d >= m), so
-# one banded self-join + per-diagonal window pass serves both keys.
-# Same (applicationId, fixture) cache discipline as graph's pivot
-# frame; hygiene caveats in go_batch_processor_spark.dfcache.
-_MP_DISTS_CACHE: dict = {}
-
-
 def _mp_dists(spark: SparkSession, sf_dir: str):
     """(dists, n): the one-directional (i < j) z-normalized distance
     frame over all subsequence pairs with diagonal d >= MP_EXCL_H, and
     the hourly series length n. localCheckpoint'd; pair-count-sized
-    (bounded by series length squared, not data volume)."""
-    import os
+    (bounded by series length squared, not data volume).
 
-    key = (spark.sparkContext.applicationId, os.path.realpath(sf_dir))
-    from go_batch_processor_spark.dfcache import evict_stale
-
-    evict_stale(_MP_DISTS_CACHE, key[0])
-    if key in _MP_DISTS_CACHE:
-        return _MP_DISTS_CACHE[key]
+    Shared code for the matrix-profile family (profile, AB-join, motif
+    and discord top-k), which all read the same (i, j, dist) frame —
+    the AB-join's pairs are the subset with d >= m. It runs the banded
+    self-join + per-diagonal window pass on each call."""
     ev = load_table(spark, sf_dir, "events")
     hourly = (
         ev.groupBy(F.date_trunc("hour", "ts").alias("h"))
@@ -4674,7 +4662,6 @@ def _mp_dists(spark: SparkSession, sf_dir: str):
         .localCheckpoint(eager=False)
     )
     n = int(hourly.agg(F.max("i")).collect()[0][0] or 0)
-    _MP_DISTS_CACHE[key] = (dists, n)
     return dists, n
 
 
@@ -4708,11 +4695,11 @@ def timeseries_matrix_profile_join(spark: SparkSession, sf_dir: str) -> DataFram
     diagonal d >= m > the self-profile's m/2 band, so the pairs are a
     SUBSET of the shared distance frame).
 
-    Exactness/scale shape: consumes the SAME cached pairwise distance
-    frame as timeseries_matrix_profile (_mp_dists — one banded
-    self-join + per-diagonal integer windows serves both keys; running
-    both pays the O(n^2) pass once), then one filter + one
-    partial-combinable groupBy(j) min and a broadcast argmin join.
+    Exactness/scale shape: consumes the SAME pairwise distance frame
+    as timeseries_matrix_profile (_mp_dists — one banded self-join +
+    per-diagonal integer windows, shared code run on each call), then
+    one filter + one partial-combinable groupBy(j) min and a broadcast
+    argmin join.
     Split point is the series midpoint (max(i) DIV 2) — deterministic,
     calendar-derived. All determinism properties inherit from the base
     frame (exact integer sufficient statistics, one exact->double cast,
@@ -4766,9 +4753,9 @@ def timeseries_motif_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     seasonal-shape discovery. Exclusion zone and window inherit from
     the profile family.
 
-    Exactness/scale shape: a pure integer top-k over the SAME cached
+    Exactness/scale shape: a pure integer top-k over the SAME
     pairwise-distance frame as timeseries_matrix_profile /
-    _join (_mp_dists — the third consumer of one O(n^2) pass).
+    _join (_mp_dists — the O(n^2) pass, shared code run on each call).
     Distances are bit-identical doubles on both engines (exact integer
     sufficient statistics, one cast each), so ORDER BY dist with the
     (i, j) tie-break selects the identical pair set; TakeOrderedAndProject
@@ -4821,9 +4808,9 @@ def timeseries_discord_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant) has an undefined profile value and drops out before the
     top-k on both engines.
 
-    Exactness/scale shape: the FOURTH consumer of the one cached
-    O(n^2) pairwise pass (_mp_dists — profile, AB-join, motif top-k,
-    discord top-k all ride the same frame); distances are bit-identical
+    Exactness/scale shape: the FOURTH consumer of the O(n^2) pairwise
+    pass (_mp_dists — profile, AB-join, motif top-k and discord top-k
+    share its code, each run builds the frame); distances are bit-identical
     doubles (exact integer sufficient statistics, one cast each), so
     min per i, the argmin tie-break (smallest j), and ORDER BY mp DESC
     with the i tie-break select the identical rows; the top-k plans as

@@ -1,13 +1,12 @@
 """Pins for the round-10 ADVICE fixes: the scalar_try_safe RLIKE guard
-must be semantics-preserving vs the unguarded cast, dfcache eviction
-must actually free localCheckpoint storage blocks, and the catalog
+must be semantics-preserving vs the unguarded cast, and the catalog
 row-count cache must evict superseded entries and reject remote paths."""
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from go_batch_processor_spark import catalog, dfcache
+from go_batch_processor_spark import catalog
 
 # The guard pattern as scalar_try_safe spells it (PySpark expr string
 # escaping: \\\\s in source -> \\s in SQL text -> \s in the Java regex).
@@ -38,27 +37,6 @@ def test_try_safe_guard_matches_unguarded_cast(spark):
     ).collect()
     diverged = [(r.s, r.plain, r.guarded) for r in rows if r.plain != r.guarded]
     assert not diverged, diverged
-
-
-def test_dfcache_drop_frees_checkpoint_blocks(spark):
-    """Evicting a cache entry must release its executor-storage blocks
-    immediately, not merely drop the Python reference (r10 ADVICE:
-    DataFrame.unpersist is a no-op for localCheckpoint'd frames — the
-    blocks belong to the LogicalRDD's rdd)."""
-    sc = spark.sparkContext
-
-    def n_stored() -> int:
-        return len(sc._jsc.sc().getRDDStorageInfo())
-
-    base = n_stored()
-    df = spark.range(500).selectExpr("id", "id * 3 AS y").localCheckpoint(
-        eager=True
-    )
-    assert n_stored() == base + 1
-    cache = {("app", "dir"): df}
-    dfcache._drop(cache, ("app", "dir"))
-    assert cache == {}
-    assert n_stored() == base
 
 
 def test_row_count_cache_evicts_superseded_entries(tmp_path):

@@ -3,10 +3,10 @@
 The stats_kaplan_meier / stats_nelson_aalen r06-r08 driver-only hash reds
 were an output-dtype divergence (oracle HUGEINT -> pandas float64 vs Spark
 int64 — identical values, different hash), invisible to the old
-float-coercing local compare. These tests keep the whole class dead:
+float-coercing local compare. These tests keep the whole class dead,
+together with the per-key DuckDB DESCRIBE vs Spark schema kind check in
+tests/test_oracle_parity.py::test_query_matches_oracle:
 
-- the static whole-registry audit (DuckDB DESCRIBE vs Spark lazy schema)
-  must report zero kind mismatches;
 - tests/parity.assert_frames_match must REJECT an int/float dtype split
   even when values are numerically equal (the driver-faithful behavior),
   while tolerating the decimal/float split the driver demonstrably
@@ -15,51 +15,10 @@ float-coercing local compare. These tests keep the whole class dead:
 
 from __future__ import annotations
 
-import os
-import sys
-
-import duckdb
 import pandas as pd
 import pytest
 
-sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
-
-from go_batch_processor_spark.catalog import TABLE_NAMES
-from go_batch_processor_spark.registry import REGISTRY, _ensure_loaded
 from tests.parity import assert_frames_match
-
-_ensure_loaded()
-
-
-def test_registry_oracle_output_dtype_kinds_match(spark, sf_dir):
-    from oracle_dtype_audit import duck_kind, spark_kind
-
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    bad = []
-    for name, spec in sorted(REGISTRY.items()):
-        if spec.oracle is None:
-            continue
-        dkinds = {
-            r[0]: duck_kind(r[1])
-            for r in con.sql(f"DESCRIBE ({spec.oracle})").fetchall()
-        }
-        skinds = {
-            f.name: spark_kind(f.dataType)
-            for f in spec.fn(spark, sf_dir).schema.fields
-        }
-        for c in sorted(set(dkinds) | set(skinds)):
-            dk, sk = dkinds.get(c), skinds.get(c)
-            # decimal<->float materializes identically (duckdb .df() maps
-            # DECIMAL to float64) — allowed, same rule as tests/parity.py.
-            if dk == "decimal":
-                dk = "float"
-            if sk == "decimal":
-                sk = "float"
-            if dk != sk:
-                bad.append((name, c, sk, dk))
-    assert not bad, f"oracle output dtype-kind mismatches: {bad}"
 
 
 def test_parity_compare_rejects_int_float_split():

